@@ -3,9 +3,9 @@
 Re-expresses the reference's Load stage (etl_pipeline.py:94-127) — per-key
 INSERT IGNORE + SELECT-back + iterrows key swap — as three distributed
 operators: dimension build (distinct + deterministic surrogate keys),
-incremental dimension upsert (anti-join append preserving existing keys),
-and fact build (broadcast-join key swap). No driver-side loops; the N+1
-per-key round-trip pattern becomes one job.
+incremental dimension rows (anti-join, keys numbered after the existing
+ones), and fact build (broadcast-join key swap). No driver-side loops;
+the N+1 per-key round-trip pattern becomes one job.
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def build_dim(df: DataFrame, natural_key: str, surrogate_name: str, key_name: str | None = None) -> DataFrame:
+def build_dim(df: DataFrame, natural_key: str, surrogate_name: str) -> DataFrame:
     """Build a dimension from the distinct values of ``natural_key``.
 
     Surrogate keys are ``dense_rank`` over the natural key order —
@@ -23,37 +23,33 @@ def build_dim(df: DataFrame, natural_key: str, surrogate_name: str, key_name: st
     ordering explicit). A single window over the distinct set is cheap:
     dims are tiny by definition.
     """
-    out_key = key_name or natural_key
-    # rank over the RENAMED column — ordering by the source name breaks
-    # resolution whenever key_name differs from natural_key
-    w = Window.orderBy(F.col(out_key))
+    w = Window.orderBy(F.col(natural_key))
     return (
-        df.select(F.col(natural_key).alias(out_key))
+        df.select(natural_key)
         .distinct()
         .withColumn(surrogate_name, F.dense_rank().over(w).cast("int"))
-        .select(surrogate_name, out_key)
+        .select(surrogate_name, natural_key)
     )
 
 
-def upsert_dim(existing: DataFrame, incoming: DataFrame, natural_key: str, surrogate_name: str) -> DataFrame:
-    """Incremental dimension load (INSERT IGNORE, etl_pipeline.py:97,106).
-
-    Existing rows keep their surrogate keys; new natural keys get keys
-    starting after max(existing). Deterministic: new keys assigned in
-    natural-key order.
+def new_dim_rows(existing: DataFrame, incoming: DataFrame, natural_key: str, surrogate_name: str) -> DataFrame:
+    """The rows an incremental dimension load adds (INSERT IGNORE,
+    etl_pipeline.py:97,106): natural keys of ``incoming`` absent from
+    ``existing``, numbered after max(existing) in natural-key order.
+    Existing rows keep their surrogate keys, so the upserted dimension
+    is ``existing`` ∪ these rows.
     """
     new_keys = incoming.select(natural_key).distinct().join(
         existing.select(natural_key), on=natural_key, how="left_anti"
     )
     max_key = existing.agg(F.coalesce(F.max(surrogate_name), F.lit(0)).alias("m"))
     w = Window.orderBy(F.col(natural_key))
-    assigned = (
+    return (
         new_keys.withColumn("__rk", F.dense_rank().over(w))
         .crossJoin(F.broadcast(max_key))
         .withColumn(surrogate_name, (F.col("__rk") + F.col("m")).cast("int"))
         .select(surrogate_name, natural_key)
     )
-    return existing.select(surrogate_name, natural_key).unionByName(assigned)
 
 
 def build_fact(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -23,6 +24,19 @@ def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = N
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when nothing was written
+    there yet. Only a missing path means "no table": any other read
+    error (an unreadable footer, a permission error) propagates, so an
+    incremental load never mistakes a damaged table for an empty one."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
 
 
 # Parquet footer schemas by absolute path, process-wide. A bare

@@ -52,29 +52,31 @@ def idempotent_append(
     existing: DataFrame,
     keys: list[str],
     sink,
-) -> DataFrame:
+) -> int:
     """S4/J3 — INSERT IGNORE semantics (etl_pipeline.py:97,106,122).
 
     Anti-join ``new_rows`` against ``existing`` on ``keys`` so only
     unseen keys reach the sink, then invoke ``sink(df)`` (a write
-    callback: jdbc append, parquet append, ...). Returns the appended
-    subset. Within-batch duplicates are also collapsed (first by key),
-    matching INSERT IGNORE's first-wins behavior.
+    callback: jdbc append, parquet append, ...). Returns the number of
+    rows appended. Within-batch duplicates are also collapsed (first by
+    key), matching INSERT IGNORE's first-wins behavior.
 
-    The delta is PINNED (persist + materialize) before the sink runs:
-    when ``existing`` lazily re-reads the same table the sink appends to
+    The delta is PINNED (persist + count) before the sink runs: when
+    ``existing`` lazily re-reads the same table the sink appends to
     (JDBC, parquet re-read), an unpinned anti-join would re-evaluate
     AFTER the write and return the empty post-append delta — or worse,
     double-append under retries. The pin is one pass over the delta,
-    which the sink was about to pay anyway. The returned DataFrame is
-    the persisted delta and is OWNED BY THE CALLER (unpersist when
-    done — SCALING.md cache contract).
+    which the sink was about to pay anyway, and is released before
+    returning.
     """
     deduped = new_rows.dropDuplicates(keys)
     fresh = anti_join_new_keys(deduped, existing, keys).persist()
-    fresh.count()  # materialize BEFORE the sink mutates `existing`
-    sink(fresh)
-    return fresh
+    try:
+        n = fresh.count()  # materialize BEFORE the sink mutates `existing`
+        sink(fresh)
+    finally:
+        fresh.unpersist()
+    return n
 
 
 def overwrite_partitions_dynamic(df: DataFrame, path: str, partition_cols: list[str]) -> None:

@@ -5,10 +5,11 @@ backup CSVs over 14 days, `.MISSING_LARGE_BLOBS:1-11`), relying on
 MySQL INSERT IGNORE for dim stability (etl_pipeline.py:97,106) and
 fact idempotence (:122). `plans/reference_pipeline.py` is the one-shot
 batch form; this module is the cadence form as a CHECKPOINTED STREAM:
-each micro-batch of raw posts runs transform → dim UPSERT (existing
-surrogate keys preserved, new natural keys appended after max — the
-exact INSERT IGNORE + SELECT-back semantics) → broadcast key-swap fact
-build → anti-join idempotent fact append.
+each micro-batch of raw posts runs transform → the batch form's
+``upsert_star`` (dim UPSERT keeping existing surrogate keys, new natural
+keys numbered after max — the exact INSERT IGNORE + SELECT-back
+semantics → broadcast key-swap fact build → anti-join idempotent fact
+append), reading and writing the versioned layout below.
 
 Replay safety follows the repo's versioned-state convention
 (stream_jobs._state_version_below): foreachBatch is at-least-once, so
@@ -21,19 +22,22 @@ Replay safety follows the repo's versioned-state convention
 
 Final-state contract (pinned in tests/test_streaming.py): the star
 read-back after the stream drains is VALUE-EQUAL to the one-shot batch
-pipeline over the same posts — surrogate ids may differ (arrival-order
-vs global dense_rank) but the read-back resolves surrogates to natural
-values, which is what the reference's charts consumed.
+pipeline over the same posts — surrogate ids may differ (each load
+numbers only the keys it has not seen, and the two paths group the
+posts into loads differently) but the read-back resolves surrogates to
+natural values, which is what the reference's charts consumed.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.etl import build_fact, upsert_dim
-from ..plans.reference_pipeline import transform
+from ..plans.reference_pipeline import read_star, transform, upsert_star
+from ..sources.readers import read_parquet_or_none
 from .stream_jobs import _state_version_below
 
 RAW_POSTS = T.StructType(
@@ -46,23 +50,6 @@ RAW_POSTS = T.StructType(
     ]
 )
 
-_FACT_COLS = [
-    "id", "content", "url", "sentiment", "sentiment_label",
-    "dropout_mentioned", "subreddit_id", "time_id",
-]
-
-
-def _load_dim(
-    spark: SparkSession, path: str, batch_id: int, natural_key: str,
-    surrogate: str, key_type: str,
-) -> DataFrame:
-    v = _state_version_below(path, batch_id)
-    if v is None:
-        return spark.createDataFrame(
-            [], f"{surrogate} int, {natural_key} {key_type}"
-        )
-    return spark.read.parquet(f"{path}/v{v}")
-
 
 def _reference_merge_one_batch(
     batch_df: DataFrame, batch_id: int, warehouse_dir: str
@@ -70,43 +57,26 @@ def _reference_merge_one_batch(
     """One micro-batch of the incremental reference pipeline;
     module-level for direct replay testing."""
     spark = batch_df.sparkSession
-    enriched = transform(batch_df.dropDuplicates(["id"]))
 
-    sub_path = f"{warehouse_dir}/dim_subreddit"
-    time_path = f"{warehouse_dir}/dim_time"
-    dim_sub = upsert_dim(
-        _load_dim(spark, sub_path, batch_id, "name", "subreddit_id", "string"),
-        enriched.select(F.col("subreddit").alias("name")),
-        "name",
-        "subreddit_id",
-    )
-    dim_time = upsert_dim(
-        _load_dim(spark, time_path, batch_id, "year", "time_id", "int"),
-        enriched.select("year"),
-        "year",
-        "time_id",
-    )
-    dim_sub.write.mode("overwrite").parquet(f"{sub_path}/v{batch_id}")
-    dim_time.write.mode("overwrite").parquet(f"{time_path}/v{batch_id}")
+    def read_dim(table: str) -> DataFrame | None:
+        v = _state_version_below(f"{warehouse_dir}/{table}", batch_id)
+        return None if v is None else spark.read.parquet(f"{warehouse_dir}/{table}/v{v}")
 
-    fact = build_fact(
-        enriched,
-        [
-            (dim_sub, "subreddit", "name", "subreddit_id"),
-            (dim_time, "year", "year", "time_id"),
-        ],
-        _FACT_COLS,
-    )
+    def write_dim(table: str, dim: DataFrame, new_rows: DataFrame) -> DataFrame:
+        path = f"{warehouse_dir}/{table}/v{batch_id}"
+        dim.unionByName(new_rows).write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
     fact_path = f"{warehouse_dir}/fact_post"
-    try:
-        prior = spark.read.parquet(fact_path).filter(
-            F.col("batch_id") < batch_id
-        )
-        fact = fact.join(prior.select("id"), "id", "left_anti")
-    except Exception:
-        pass  # first batch: no fact table yet
-    # replay-idempotent: the batch's whole partition is rewritten
-    fact.write.mode("overwrite").parquet(f"{fact_path}/batch_id={batch_id}")
+    prior = read_parquet_or_none(spark, fact_path)
+    upsert_star(
+        transform(batch_df.dropDuplicates(["id"])),
+        read_dim,
+        write_dim,
+        None if prior is None else prior.filter(F.col("batch_id") < batch_id),
+        # replay-idempotent: the batch's whole partition is rewritten
+        lambda df: df.write.mode("overwrite").parquet(f"{fact_path}/batch_id={batch_id}"),
+    )
 
 
 def incremental_reference_stream(
@@ -134,30 +104,10 @@ def incremental_reference_stream(
 
 def query_star_incremental(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     """Star read-back over the incremental warehouse: newest dim
-    versions + every fact partition (the batch pipeline's query_star
+    versions + every fact partition (the batch pipeline's ``read_star``
     against the versioned layout)."""
-    import os
-
-    def newest(path: str) -> DataFrame:
-        versions = [
-            int(d[1:]) for d in os.listdir(path)
-            if d.startswith("v") and d[1:].isdigit()
-        ]
-        return spark.read.parquet(f"{path}/v{max(versions)}")
-
-    fact = spark.read.parquet(f"{warehouse_dir}/fact_post")
-    dim_sub = newest(f"{warehouse_dir}/dim_subreddit")
-    dim_time = newest(f"{warehouse_dir}/dim_time")
-    return (
-        fact.join(F.broadcast(dim_sub), "subreddit_id")
-        .join(F.broadcast(dim_time), "time_id")
-        .select(
-            "id",
-            "content",
-            "sentiment",
-            "sentiment_label",
-            "dropout_mentioned",
-            F.col("name").alias("subreddit"),
-            "year",
-        )
+    return read_star(
+        spark,
+        warehouse_dir,
+        lambda path: f"{path}/v{_state_version_below(path, sys.maxsize)}",
     )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import EVENTS
+from ..sources.readers import read_parquet_or_none
 
 
 def _state_version_below(path: str, batch_id: int) -> int | None:
@@ -130,11 +131,9 @@ def foreach_batch_idempotent_append(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates(keys)
-        try:
-            existing = spark.read.parquet(target_path).select(*keys)
-            fresh = fresh.join(existing, on=keys, how="left_anti")
-        except Exception:
-            pass  # first batch: sink doesn't exist yet
+        existing = read_parquet_or_none(spark, target_path)
+        if existing is not None:  # None: first batch, no sink yet
+            fresh = fresh.join(existing.select(*keys), on=keys, how="left_anti")
         fresh.write.mode("append").parquet(target_path)
 
     q = (
@@ -330,11 +329,8 @@ def streaming_cms(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = cms_build(batch_df, key, depth=depth, width=width)
-        try:
-            prior = spark.read.parquet(sketch_path)
-            merged = cms_merge(prior, fresh)
-        except Exception:
-            merged = fresh  # first batch: no sketch yet
+        prior = read_parquet_or_none(spark, sketch_path)
+        merged = fresh if prior is None else cms_merge(prior, fresh)  # None: first batch
         # Materialize before overwriting the path we just read from.
         # The sketch is depth x width CELLS by construction, so the
         # collect is bounded — but guard it STRUCTURALLY (VERDICT r8

@@ -98,15 +98,15 @@ def test_jdbc_idempotent_append_converges(spark, sf_dir, derby_url):
 
     # replay the same 3 rows: nothing appended
     added = idempotent_append(first3, existing(), ["r_regionkey"], sink)
-    assert added.count() == 0
+    assert added == 0
     assert existing().count() == 3
     # full table: only the 2 unseen rows land
     added = idempotent_append(region, existing(), ["r_regionkey"], sink)
-    assert added.count() == region.count() - 3
+    assert added == region.count() - 3
     assert existing().count() == region.count()
     # convergence: a third pass is a no-op
     added = idempotent_append(region, existing(), ["r_regionkey"], sink)
-    assert added.count() == 0
+    assert added == 0
     assert {tuple(r) for r in existing().select(*region.columns).collect()} == {
         tuple(r) for r in region.collect()
     }
